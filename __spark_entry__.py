@@ -799,13 +799,22 @@ def q_m9_resolve(spark, sf_dir):
     return out.select("doc_id", "pos", "surface_form", "uri")
 
 
+def _with_ordinals(tokens: DataFrame, spots: DataFrame) -> tuple:
+    """The analysis UDFs' `ordinal` column for injected tables: a token's
+    rank by offset within its document, and a spot takes the ordinal of
+    the token at its own offset (every injected spot sits on a token)."""
+    w = Window.partitionBy("doc_id").orderBy("offset")
+    tokens = tokens.withColumn("ordinal", (F.row_number().over(w) - 1).cast("int"))
+    spots = spots.join(tokens.select("doc_id", "offset", "ordinal"), ["doc_id", "offset"])
+    return tokens, spots
+
+
 def q_d2_windows(spark, sf_dir):
-    """D2 context windowing: token-ordinal windows of 10, every spot
-    assigned to the last window whose start <= its offset
-    (ref DBTwoStepDisambiguator.scala:89-119, MAX_CONTEXT)."""
-    from dbpedia_spotlight_spark.operators.disambiguate import (
-        attach_context_windows,
-    )
+    """D2 context windowing: token-ordinal windows of 10, every spot in
+    the window of the last token at or before its offset
+    (operators/disambiguate.py:context_window; ref
+    DBTwoStepDisambiguator.scala:89-119, MAX_CONTEXT)."""
+    from dbpedia_spotlight_spark.operators.disambiguate import context_window
 
     tokens = _tok(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -816,8 +825,13 @@ def q_d2_windows(spark, sf_dir):
         _char_offset().cast("int").alias("offset"),
         "surface_form",
     )
-    _tk, spots_ctx = attach_context_windows(tokens, spots, max_tokens=10)
-    return spots_ctx.select("doc_id", "offset", "surface_form", "ctx_id")
+    _tk, spots = _with_ordinals(tokens, spots)
+    return spots.select(
+        "doc_id",
+        "offset",
+        "surface_form",
+        F.concat_ws("#", "doc_id", context_window(10)).alias("ctx_id"),
+    )
 
 
 def q_c1_candidates(spark, sf_dir):
@@ -879,7 +893,7 @@ def q_d6_tficf(spark, sf_dir):
         F.lit(False).alias("is_stopword"),
     )
     model = build_model_from_occurrences(iv, occ, tokens)
-    query = build_query_vectors(tokens, model, "doc_id")
+    query = build_query_vectors(tokens.withColumn("window_id", F.lit(0)), model)
     spots = _spots(spark, sf_dir).select(
         F.col("doc_id").cast("string").alias("doc_id"), "surface_form"
     )
@@ -888,10 +902,10 @@ def q_d6_tficf(spark, sf_dir):
             model.surface_forms.select("surface_form", "sf_id"), "surface_form"
         )
         .join(model.candidates.select("sf_id", "res_id"), "sf_id")
-        .select("doc_id", "res_id")
+        .select("doc_id", F.lit(0).alias("window_id"), "res_id")
         .distinct()
     )
-    out = tficf_scores(query, cand_pairs, model, "doc_id")
+    out = tficf_scores(query, cand_pairs, model)
     return out.select(
         "doc_id", "res_id", F.round("tficf", 6).alias("tficf")
     )
@@ -1832,7 +1846,8 @@ def q_d3_generative(spark, sf_dir):
     )
     # Whole-document scoring pinned explicitly (max_context_tokens=None):
     # this oracle's CTE chain models one context vector per document; the
-    # library default flipped to the reference's windowed mode (250) in r5.
+    # library default is the reference's windowed mode (250).
+    tokens, spots = _with_ordinals(tokens, spots)
     ann = annotate(
         iv, model, use_context=True, spots=spots, tokens=tokens, k=2,
         max_context_tokens=None,
@@ -5096,13 +5111,12 @@ def q_annotate_windowed_scored(spark, sf_dir):
     library annotate(), generative scoring, k=2) except
     max_context_tokens=10, so D2 windowing genuinely engages at test
     scale — every context vector, NIL context score and softmax runs
-    per (doc, window) composite instead of per document
-    (pipeline/annotate.py:118 -> operators/disambiguate.py:
-    attach_context_windows/score_candidates(ctx_col='ctx_id'); ref
-    DBTwoStepDisambiguator.scala:72,89-119). Oracle = the d3 CTE chain
-    re-keyed on ctx_id = doc#window (windows by token ordinal / 10,
-    spots to the window of their own token — the d2_windows-green
-    assignment)."""
+    per (doc_id, window_id) context instead of per document
+    (operators/disambiguate.py:context_window; ref
+    DBTwoStepDisambiguator.scala:72,89-119). The injected tables carry
+    `ordinal` (_with_ordinals). Oracle = the d3 CTE chain re-keyed on
+    ctx = doc#window (windows by token ordinal / 10, spots to the window
+    of their own token — the d2_windows-green assignment)."""
     from dbpedia_spotlight_spark.operators.modelbuild import (
         build_model_from_occurrences,
     )
@@ -5128,6 +5142,7 @@ def q_annotate_windowed_scored(spark, sf_dir):
         F.lit("m").alias("spot_type"),
         F.array(F.col("surface_form")).alias("token_stems"),
     )
+    tokens, spots = _with_ordinals(tokens, spots)
     ann = annotate(
         iv, model, use_context=True, spots=spots, tokens=tokens, k=2,
         max_context_tokens=10,

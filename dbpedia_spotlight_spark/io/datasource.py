@@ -280,7 +280,8 @@ class TsvReader(DataSourceReader):
             files = sorted(
                 os.path.join(self.path, f)
                 for f in os.listdir(self.path)
-                if not f.startswith((".", "_"))
+                # .tmp: a task file still being written (TsvWriter)
+                if not f.startswith((".", "_")) and not f.endswith(".tmp")
             )
         else:
             files = [self.path]
@@ -333,6 +334,10 @@ def _try_unlink(path: str) -> None:
         pass
 
 
+def _part_file(path: str, pid: int) -> str:
+    return os.path.join(path, f"part-{pid:05d}.tsv")
+
+
 class _TsvCommit(WriterCommitMessage):
     def __init__(self, path: str, rows: int):
         self.path = path
@@ -355,7 +360,7 @@ class TsvWriter(DataSourceWriter):
 
         pid = TaskContext.get().partitionId()
         os.makedirs(self.path, exist_ok=True)
-        final = os.path.join(self.path, f"part-{pid:05d}.tsv")
+        final = _part_file(self.path, pid)
         tmp = final + ".tmp"
         n = 0
         with open(tmp, "w", encoding="utf-8") as fh:
@@ -375,43 +380,45 @@ class TsvWriter(DataSourceWriter):
         os.replace(tmp, final)
         return _TsvCommit(final, n)
 
+    def _sweep_tmp(self, messages) -> None:
+        """Unlink the part-<pid>.tsv.tmp leftovers of this job's own
+        partitions (one message per partition). A .tmp under any other
+        name may be a live file of another writer and is left alone."""
+        for pid in range(len(messages)):
+            _try_unlink(_part_file(self.path, pid) + ".tmp")
+
     def commit(self, messages) -> None:
         """Job commit (r4 advisory): honor overwrite — remove pre-existing
         part files NOT produced by this job (a previous write with more
         partitions would otherwise leave phantom rows behind) — and sweep
-        any .tmp leftovers from retried tasks."""
+        this job's .tmp leftovers from retried tasks. Append mode keeps
+        stale parts: a task replaces the part file of its own partition
+        number, and the parts of a previous wider write stay readable."""
+        if not os.path.isdir(self.path):
+            return
+        self._sweep_tmp(messages)
+        if not self.overwrite:
+            return
         kept = {
             os.path.basename(m.path)
             for m in messages
             if m is not None and getattr(m, "path", None)
         }
-        if not os.path.isdir(self.path):
-            return
         for f in os.listdir(self.path):
-            full = os.path.join(self.path, f)
-            if f.endswith(".tmp"):
-                _try_unlink(full)
-            elif (
-                self.overwrite
-                and f.startswith("part-")
-                and f.endswith(".tsv")
-                and f not in kept
-            ):
-                _try_unlink(full)
+            if f.startswith("part-") and f.endswith(".tsv") and f not in kept:
+                _try_unlink(os.path.join(self.path, f))
 
     def abort(self, messages) -> None:
         """Job abort: delete whatever this job managed to write — the
         part files named in the commit messages of succeeded tasks and
-        any .tmp files of in-flight ones — so a failed job leaves the
+        the .tmp files of its in-flight ones — so a failed job leaves the
         destination as it found it."""
         if not os.path.isdir(self.path):
             return
         for m in messages:
             if m is not None and getattr(m, "path", None):
                 _try_unlink(m.path)
-        for f in os.listdir(self.path):
-            if f.endswith(".tmp"):
-                _try_unlink(os.path.join(self.path, f))
+        self._sweep_tmp(messages)
 
 
 class SpotlightTsvDataSource(DataSource):

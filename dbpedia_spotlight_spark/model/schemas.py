@@ -45,6 +45,8 @@ TOKENS_SCHEMA = T.StructType(
         T.StructField("offset", T.IntegerType(), False),
         T.StructField("is_stopword", T.BooleanType(), False),
         T.StructField("eos", T.BooleanType(), False),
+        # Rank by offset within the document; window_id = ordinal // W.
+        T.StructField("ordinal", T.IntegerType(), False),
     ]
 )
 
@@ -60,6 +62,9 @@ SPOTS_SCHEMA = T.StructType(
         # Stems of the spot's own tokens (for NIL P(s|e); the reference slices
         # token_types over [startToken, lastToken) — DBSpotter.scala:82).
         T.StructField("token_stems", T.ArrayType(T.StringType()), False),
+        # Ordinal of the last document token at or before the spot's offset
+        # (tokenizer.spot_ordinal): the spot's context window follows it.
+        T.StructField("ordinal", T.IntegerType(), False),
     ]
 )
 

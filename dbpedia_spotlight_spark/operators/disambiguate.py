@@ -16,14 +16,15 @@ Reference semantics reproduced:
       softmax over kept candidates ∪ NIL (:231-238).
 
 Scale design: the context join is driven from the candidate side —
-(doc,res) candidate pairs ⋈ context_counts on res_id (the fact table is
-partitioned by res_id), then ⋈ query vectors on (doc_id, token_id). The
+(context,res) candidate pairs ⋈ context_counts on res_id (the fact table is
+partitioned by res_id), then ⋈ query vectors on (CTX_KEY, token_id). The
 algebraic identity
 
     score(d,e) = nilScore(d) + Σ_{t: c(t,e)>0} [p(t,e) - (log(1-λ)+pLM(t))]
 
 means only *present* (token, resource) pairs are ever joined — absent pairs
-contribute exactly their nilScore term, folded in as a per-doc scalar column.
+contribute exactly their nilScore term, folded in as a per-context scalar
+column.
 No cross product, no UDF: the whole scoring stage is joins + groupBy sums
 that stay inside whole-stage codegen.
 """
@@ -42,6 +43,9 @@ LOG_LAMBDA = math.log(LAMBDA)
 LOG_1M_LAMBDA = math.log(1.0 - LAMBDA)
 
 SPOT_KEY = ["doc_id", "span_pos", "offset"]
+# The context a spot is scored against: a D2 window of its document
+# (context_window). Whole-document scoring is the one-window case.
+CTX_KEY = ["doc_id", "window_id"]
 
 
 def logaddexp(a: Column, b: Column) -> Column:
@@ -55,12 +59,9 @@ def plm_col(count: Column, total_tokens: float, vocab_size: float) -> Column:
     return F.log(count + F.lit(1.0)) - F.lit(math.log(total_tokens + vocab_size))
 
 
-def build_query_vectors(
-    tokens: DataFrame, model: SpotlightModel, ctx_col: str = "doc_id"
-) -> DataFrame:
+def build_query_vectors(tokens: DataFrame, model: SpotlightModel) -> DataFrame:
     """D1: per-context bag-of-token counts with LM probs.
-    -> (ctx_col, token_id, c, plm). The context key is the document by
-    default, or a (doc, window) composite for D2 context windowing.
+    -> (doc_id, window_id, token_id, c, plm).
     Tokens absent from the vocabulary are excluded: they cannot appear in
     any context vector, so they shift all candidate scores and the NIL
     score by the same constant — invariant for ranking, filtering and
@@ -69,7 +70,7 @@ def build_query_vectors(
     return (
         tokens.filter(~F.col("is_stopword"))
         .join(vocab, tokens["stem"] == vocab["token"], "inner")
-        .groupBy(ctx_col, "token_id")
+        .groupBy(*CTX_KEY, "token_id")
         .agg(
             F.count("*").cast("double").alias("c"),
             F.first("count").alias("_vocab_count"),
@@ -82,10 +83,10 @@ def build_query_vectors(
     )
 
 
-def nil_context_scores(query: DataFrame, ctx_col: str = "doc_id") -> DataFrame:
+def nil_context_scores(query: DataFrame) -> DataFrame:
     """D5: per-context NIL score Σ_t [log c_t + log(1-λ) + pLM(t)]
-    -> (ctx_col, nil_context_score)."""
-    return query.groupBy(ctx_col).agg(
+    -> (doc_id, window_id, nil_context_score)."""
+    return query.groupBy(*CTX_KEY).agg(
         F.sum(F.log("c") + F.lit(LOG_1M_LAMBDA) + F.col("plm")).alias(
             "nil_context_score"
         )
@@ -96,21 +97,20 @@ def context_scores(
     query: DataFrame,
     cand_pairs: DataFrame,
     model: SpotlightModel,
-    ctx_col: str = "doc_id",
 ) -> DataFrame:
-    """D3/D4: P(c|e) per (ctx_col, res_id).
+    """D3/D4: P(c|e) per (doc_id, window_id, res_id).
 
-    cand_pairs: distinct (ctx_col, res_id). Resources without any context
-    vector score NaN in the reference (0/0 division,
+    cand_pairs: distinct (doc_id, window_id, res_id). Resources without any
+    context vector score NaN in the reference (0/0 division,
     GenerativeContextSimilarity.scala:53-57) and are later dropped; here they
     get a null p_c (same downstream effect).
     """
     totals = model.resource_token_totals()  # (res_id, total_count)
-    nil_doc = nil_context_scores(query, ctx_col)
+    nil_doc = nil_context_scores(query)
 
     present = (
         cand_pairs.join(model.context_counts, "res_id", "inner")
-        .join(query, [ctx_col, "token_id"], "inner")
+        .join(query, [*CTX_KEY, "token_id"], "inner")
         .join(totals, "res_id", "inner")
     )
     # delta = p(t,e) - (log(1-λ)+pLM): the present-pair correction term
@@ -120,15 +120,15 @@ def context_scores(
     )
     deltas = present.withColumn(
         "_delta", p_te - (F.lit(LOG_1M_LAMBDA) + F.col("plm"))
-    ).groupBy(ctx_col, "res_id").agg(F.sum("_delta").alias("_sum_delta"))
+    ).groupBy(*CTX_KEY, "res_id").agg(F.sum("_delta").alias("_sum_delta"))
 
     has_context = totals.filter(F.col("total_count") > 0).select("res_id")
     return (
         cand_pairs.join(F.broadcast(has_context), "res_id", "left_semi")
-        .join(deltas, [ctx_col, "res_id"], "left")
-        .join(nil_doc, ctx_col, "left")
+        .join(deltas, [*CTX_KEY, "res_id"], "left")
+        .join(nil_doc, CTX_KEY, "left")
         .select(
-            ctx_col,
+            *CTX_KEY,
             "res_id",
             (
                 F.coalesce(F.col("_sum_delta"), F.lit(0.0))
@@ -178,13 +178,13 @@ def score_candidates(
     tokens: DataFrame | None,
     model: SpotlightModel,
     use_context: bool = True,
-    ctx_col: str = "doc_id",
 ) -> DataFrame:
     """D7/D8: attach p_e, p_s_given_e, p_c_given_e and the mixture score; also
     the per-spot NIL mixture score (columns nil_score, nil_context_score).
 
     spot_cands columns: SPOT_KEY + surface_form, spot_prob, spot_type,
-    token_stems, sf_id, annotated_count, total_count, res_id, pair_count.
+    token_stems, sf_id, annotated_count, total_count, res_id, pair_count;
+    with context scoring also window_id, as on `tokens` (context_window).
     """
     res_dim = F.broadcast(
         model.resources.select("res_id", "uri", "support", "types")
@@ -198,13 +198,13 @@ def score_candidates(
     df = df.withColumn("p_e", p_e).withColumn("p_s_given_e", p_s)
 
     if use_context and model.context_counts is not None and tokens is not None:
-        query = build_query_vectors(tokens, model, ctx_col)
-        cand_pairs = df.select(ctx_col, "res_id").distinct()
-        ctx = context_scores(query, cand_pairs, model, ctx_col)
-        nil_doc = nil_context_scores(query, ctx_col)
+        query = build_query_vectors(tokens, model)
+        cand_pairs = df.select(*CTX_KEY, "res_id").distinct()
+        ctx = context_scores(query, cand_pairs, model)
+        nil_doc = nil_context_scores(query)
         df = (
-            df.join(ctx, [ctx_col, "res_id"], "left")
-            .join(nil_doc, ctx_col, "left")
+            df.join(ctx, [*CTX_KEY, "res_id"], "left")
+            .join(nil_doc, CTX_KEY, "left")
             .withColumn("p_c_given_e", F.col("p_c"))
             .withColumn(
                 "nil_context_score",
@@ -288,81 +288,26 @@ def disambiguate_best(scored_topk: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # D2: context windowing (ref DBTwoStepDisambiguator.scala:72,89-119 —
-# long documents are sliced into token windows of MAX_CONTEXT tokens and
-# each spot is disambiguated against its own window's context vector).
+# long documents are sliced into context windows and each spot is
+# disambiguated against its own window's context vector). Deviation: the
+# windows here are fixed runs of token ordinals, while the reference
+# accumulates whole sentences up to MAX_CONTEXT=250 tokens (:102).
 # ---------------------------------------------------------------------------
 
-MAX_CONTEXT_TOKENS = 250  # ref DBTwoStepDisambiguator.scala:72
+# Window width of whole-document scoring: no document has more tokens.
+WHOLE_DOCUMENT = 2**31 - 1
 
 
-def attach_context_windows(
-    tokens: DataFrame,
-    spots: DataFrame,
-    max_tokens: int = MAX_CONTEXT_TOKENS,
-) -> tuple:
-    """Assign a ctx_id = doc#window composite to tokens and spots.
-
-    window_id = floor(token_ordinal / max_tokens) per document; a spot
-    belongs to the *last* window whose start offset <= its offset (the
-    reference's takeWhile assigns every occurrence to a window —
-    DBTwoStepDisambiguator.scala:89-119). Range containment would silently
-    drop a spot whose offset falls between windows when tokenizer and
-    spotter offsets disagree; here such spots fall back to the first
-    window. Returns (tokens_with_ctx, spots_with_ctx) — feed both to
-    score_candidates(ctx_col='ctx_id').
-
-    Shape (r5): the spot assignment is ONE union + ONE doc-keyed window
-    pass — window-start rows and spot-offset rows interleave in (offset,
-    starts-first) order and `last(start_ctx, ignorenulls)` IS "last
-    window whose start <= offset" (r4's join-chain formulation planned 4
-    extra shuffles over the spot table, measured ~2x the cost of the
-    whole assignment at the scaling-probe corpus). All three shuffles
-    here are doc-keyed — nothing global.
-    """
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    tk = tokens.withColumn(
-        "window_id",
-        F.floor((F.row_number().over(w) - 1) / F.lit(max_tokens)).cast("int"),
-    ).withColumn("ctx_id", F.concat_ws("#", "doc_id", "window_id"))
-    ranges = tk.groupBy("doc_id", "window_id", "ctx_id").agg(
-        F.min("offset").alias("_w_start")
-    )
-    events = ranges.select(
-        "doc_id",
-        F.col("_w_start").alias("offset"),
-        F.lit(1).alias("_is_start"),
-        F.col("ctx_id").alias("_start_ctx"),
-    ).unionByName(
-        spots.select("doc_id", "offset")
-        .distinct()
-        .select(
-            "doc_id",
-            "offset",
-            F.lit(0).alias("_is_start"),
-            F.lit(None).cast("string").alias("_start_ctx"),
-        )
-    )
-    ew = Window.partitionBy("doc_id").orderBy(
-        F.col("offset").asc(), F.col("_is_start").desc()
-    )
-    run = ew.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    full = ew.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    assigned = (
-        events.withColumn(
-            "ctx_id",
-            F.coalesce(
-                F.last("_start_ctx", ignorenulls=True).over(run),
-                # spot before the first window start -> first window
-                F.first("_start_ctx", ignorenulls=True).over(full),
-            ),
-        )
-        .filter(F.col("_is_start") == 0)
-        .select("doc_id", "offset", "ctx_id")
-    )
-    spots_ctx = spots.join(assigned, ["doc_id", "offset"])
-    return tk, spots_ctx
+def context_window(max_tokens: int | None) -> Column:
+    """window_id of a token or spot from its `ordinal` (TOKENS_SCHEMA,
+    SPOTS_SCHEMA): windows of max_tokens consecutive token ordinals. A
+    spot's ordinal is that of the last token at or before it, so it is
+    scored against the window holding that token. A falsy max_tokens
+    means one window per document. It is the same expression with an
+    unreachable width, not a literal 0: Catalyst would fold a constant
+    out of the context-key joins and plan whole-document scoring apart."""
+    width = max_tokens or WHOLE_DOCUMENT
+    return F.floor(F.col("ordinal") / F.lit(width)).cast("int")
 
 
 # ---------------------------------------------------------------------------
@@ -379,39 +324,39 @@ def tficf_scores(
     query: DataFrame,
     cand_pairs: DataFrame,
     model: SpotlightModel,
-    ctx_col: str = "doc_id",
 ) -> DataFrame:
-    """-> (ctx_col, res_id, tficf). All relational: the per-query candidate
-    statistics (nCand, nCandWithToken) are groupBy aggregates over the
-    cand_pairs ⋈ context_counts join — no UDF, no cross product."""
-    n_cand = cand_pairs.groupBy(ctx_col).agg(
+    """-> (doc_id, window_id, res_id, tficf). All relational: the
+    per-query candidate statistics (nCand, nCandWithToken) are groupBy
+    aggregates over the cand_pairs ⋈ context_counts join — no UDF, no
+    cross product."""
+    n_cand = cand_pairs.groupBy(*CTX_KEY).agg(
         F.countDistinct("res_id").alias("_n_cand")
     )
     # (ctx, token_id) -> how many of this query's candidates contain t
     cand_tokens = cand_pairs.join(
         model.context_counts.select("res_id", "token_id", "count"), "res_id"
     )
-    n_with = cand_tokens.groupBy(ctx_col, "token_id").agg(
+    n_with = cand_tokens.groupBy(*CTX_KEY, "token_id").agg(
         F.countDistinct("res_id").alias("_n_with")
     )
     norm = model.context_counts.groupBy("res_id").agg(
         F.countDistinct("token_id").alias("_norm")
     )
     present = (
-        query.select(ctx_col, "token_id")
-        .join(cand_tokens, [ctx_col, "token_id"], "inner")
-        .join(n_with, [ctx_col, "token_id"], "inner")
-        .join(n_cand, ctx_col, "inner")
+        query.select(*CTX_KEY, "token_id")
+        .join(cand_tokens, [*CTX_KEY, "token_id"], "inner")
+        .join(n_with, [*CTX_KEY, "token_id"], "inner")
+        .join(n_cand, CTX_KEY, "inner")
     )
     icf = F.log(F.col("_n_cand") / F.col("_n_with")) + F.lit(1.0)
     summed = present.withColumn(
         "_tficf", F.col("count") * icf
-    ).groupBy(ctx_col, "res_id").agg(F.sum("_tficf").alias("_sum"))
+    ).groupBy(*CTX_KEY, "res_id").agg(F.sum("_tficf").alias("_sum"))
     return (
-        cand_pairs.join(summed, [ctx_col, "res_id"], "left")
+        cand_pairs.join(summed, [*CTX_KEY, "res_id"], "left")
         .join(F.broadcast(norm), "res_id", "left")
         .select(
-            ctx_col,
+            *CTX_KEY,
             "res_id",
             (
                 F.coalesce(F.col("_sum"), F.lit(0.0))

@@ -1209,7 +1209,8 @@ def closeness_centrality(
     k'(v) = k minus one when v is itself a pivot (its d=0 self-row
     carries no information). reached/total_dist become DOUBLE estimates
     in this mode; with k >= |V| the estimates equal the exact values
-    (the property the error-bound test pins).
+    (the property the error-bound test pins). Needs k >= 2: ValueError
+    otherwise, also when the graph has fewer than 2 nodes.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
@@ -1221,8 +1222,10 @@ def closeness_centrality(
         nodes = nodes.localCheckpoint()
         n_total = nodes.count()
         k = min(int(sample_sources), n_total)
-        if k < 1:
-            raise ValueError("sample_sources needs >= 1 pivot")
+        if k < 2:
+            # a pivot's own row carries no information: with one pivot its
+            # scale (n-1)/(k-1) divides by zero
+            raise ValueError("sample_sources needs >= 2 pivots")
         pivots = _hash_pivots(nodes, k).localCheckpoint()
         rev = bfs_sigma(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),

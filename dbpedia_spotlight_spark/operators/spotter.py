@@ -44,6 +44,7 @@ from dbpedia_spotlight_spark.model.model_tables import DEFAULT_SPOT_WEIGHTS
 from dbpedia_spotlight_spark.model.schemas import SPOTS_SCHEMA
 from dbpedia_spotlight_spark.operators.tokenizer import (
     DEFAULT_STOPWORDS,
+    spot_ordinal,
     stem,
     tokenize_text,
 )
@@ -318,25 +319,23 @@ def _uppercase_spans(tokens: list) -> list:
 
 def _extract_doc_spots(
     text: str,
+    toks: list,
     base_offset: int,
     dictionary: SpotterDictionary,
     weights,
-    stopwords: frozenset,
     generators: tuple = (),
     type_order: tuple = TYPE_ORDER,
     score_memo: dict | None = None,
-    token_memo: dict | None = None,
 ) -> list:
     """DBSpotter.extract for one text span: sentences -> candidate spans ->
-    sub-span search -> overlap resolution. Returns
-    [(offset, surface_form, spot_prob, spot_type, token_stems), ...].
+    sub-span search -> overlap resolution. `toks` is tokenize_text(text).
+    Returns [(offset, surface_form, spot_prob, spot_type, token_stems), ...].
 
     `generators` injects model-based candidate-span sources (P2/P12 — the
     reference's OpenNLPSpotter.generateCandidates:40-62 adds chunker/NER
     spans on top of the uppercase sequences); when any are given, the FSA
     walk is skipped, matching the reference's OpenNLP spotter shape.
-    `token_memo`/`score_memo` are Arrow-batch-wide caches (round-3 #8)."""
-    toks = tokenize_text(text, stopwords, token_memo)
+    `score_memo` is an Arrow-batch-wide cache (round-3 #8)."""
     # group into per-sentence parallel lists in one ordered pass
     # (tokenize_text emits sentences contiguously; the dict-of-tuple-lists
     # regrouping was double-handling every token)
@@ -601,21 +600,24 @@ def spot_documents(
             rows = {
                 "doc_id": [], "span_pos": [], "offset": [],
                 "surface_form": [], "spot_prob": [], "spot_type": [],
-                "token_stems": [],
+                "token_stems": [], "ordinal": [],
             }
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+                token_offsets, found = [], []
                 for span_pos, sp in enumerate(spans):
                     if sp["kind"] != "text" or sp["text"] is None:
                         continue
                     base = int(sp["offset"] or 0)
                     text = sp["text"]
+                    toks = tokenize_text(text, sw, token_memo)
+                    token_offsets += [base + t[3] for t in toks]
                     if ac is not None:
                         hits = [
                             (s, e)
                             for s, e in ac.find_all(text)
                             if _word_bounded(text, s, e)
                         ]
-                        found = [
+                        span_spots = [
                             (
                                 base + s,
                                 text[s:e],
@@ -626,18 +628,20 @@ def spot_documents(
                             for s, e in leftmost_longest(hits)
                         ]
                     else:
-                        found = _extract_doc_spots(
-                            text, base, dic, w, sw, gens, torder,
-                            score_memo, token_memo,
+                        span_spots = _extract_doc_spots(
+                            text, toks, base, dic, w, gens, torder, score_memo
                         )
-                    for off, sf, prob, st, stems_ in found:
-                        rows["doc_id"].append(doc_id)
-                        rows["span_pos"].append(span_pos)
-                        rows["offset"].append(off)
-                        rows["surface_form"].append(sf)
-                        rows["spot_prob"].append(float(prob))
-                        rows["spot_type"].append(st)
-                        rows["token_stems"].append(list(stems_))
+                    found += [(span_pos, *spot) for spot in span_spots]
+                token_offsets.sort()
+                for span_pos, off, sf, prob, st, stems_ in found:
+                    rows["doc_id"].append(doc_id)
+                    rows["span_pos"].append(span_pos)
+                    rows["offset"].append(off)
+                    rows["surface_form"].append(sf)
+                    rows["spot_prob"].append(float(prob))
+                    rows["spot_type"].append(st)
+                    rows["token_stems"].append(list(stems_))
+                    rows["ordinal"].append(spot_ordinal(token_offsets, off))
             yield pd.DataFrame(rows)
 
     return documents.select("doc_id", "spans").mapInPandas(run, SPOTS_SCHEMA)

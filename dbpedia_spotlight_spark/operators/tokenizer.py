@@ -22,6 +22,7 @@ time.
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
 from collections.abc import Iterator
 from functools import lru_cache
 
@@ -93,6 +94,24 @@ def tokenize_text(
     return out
 
 
+def offset_ordinals(offsets: list) -> list:
+    """Each token's rank by offset within its document (ties keep emission
+    order) — the `ordinal` column of the tokens table."""
+    ranks = [0] * len(offsets)
+    for rank, i in enumerate(sorted(range(len(offsets)), key=offsets.__getitem__)):
+        ranks[i] = rank
+    return ranks
+
+
+def spot_ordinal(sorted_offsets: list, offset: int) -> int:
+    """The `ordinal` of a spot: that of the last token of its document whose
+    offset is <= the spot's, or 0 when there is none. A spot therefore
+    shares the context window of the token it starts on, and a spot that
+    sits on no token falls into the window of the last token before it
+    (the first window when it precedes every token)."""
+    return max(bisect_right(sorted_offsets, offset) - 1, 0)
+
+
 def tokenize_documents(
     documents: DataFrame,
     stopwords: frozenset = DEFAULT_STOPWORDS,
@@ -100,7 +119,8 @@ def tokenize_documents(
     """documents(doc_id, spans) -> tokens table (TOKENS_SCHEMA).
 
     Offsets are global within the document's text stream: span.offset +
-    local offset, matching the reference's Text-level offsets.
+    local offset, matching the reference's Text-level offsets. `ordinal`
+    is the token's rank by offset within its document (offset_ordinals).
     """
     spark = documents.sparkSession
     bc_stop = spark.sparkContext.broadcast(stopwords)
@@ -112,8 +132,10 @@ def tokenize_documents(
             rows = {
                 "doc_id": [], "span_pos": [], "sent_id": [], "token": [],
                 "stem": [], "offset": [], "is_stopword": [], "eos": [],
+                "ordinal": [],
             }
             for doc_id, spans in zip(pdf["doc_id"], pdf["spans"]):
+                first = len(rows["offset"])
                 for span_pos, sp in enumerate(spans):
                     if sp["kind"] != "text" or sp["text"] is None:
                         continue
@@ -129,6 +151,7 @@ def tokenize_documents(
                         rows["offset"].append(base + off)
                         rows["is_stopword"].append(is_sw)
                         rows["eos"].append(eos)
+                rows["ordinal"] += offset_ordinals(rows["offset"][first:])
             yield pd.DataFrame(rows)
 
     return documents.select("doc_id", "spans").mapInPandas(run, TOKENS_SCHEMA)

@@ -7,7 +7,7 @@ Spark DAG:
     documents --mapInPandas--> spots          (broadcast dictionary, no shuffle)
     documents --mapInPandas--> tokens         (no shuffle)
     spots ⋈ surface_forms ⋈ candidates        (broadcast + two-stage skew join)
-    ⋈ context_counts ⋈ query vectors -> agg   (shuffle on res_id / doc_id)
+    ⋈ context_counts ⋈ query vectors -> agg   (shuffle on res_id / context)
     window rank / softmax                     (shuffle on spot key)
     filters                                   (no shuffle)
 
@@ -27,8 +27,8 @@ from dbpedia_spotlight_spark.operators.candidates import (
     generate_candidates,
 )
 from dbpedia_spotlight_spark.operators.disambiguate import (
-    attach_context_windows,
     best_k,
+    context_window,
     disambiguate_best,
     score_candidates,
 )
@@ -74,20 +74,25 @@ def annotate(
 
     With k=1 this is the reference `disambiguate` (best per spot, ordered by
     offset); with k>1 the bestK ranked lists (rank column retained).
-    max_context_tokens enables D2 context windowing (long documents are
-    scored against per-window context vectors instead of the whole doc;
-    ref DBTwoStepDisambiguator.scala:89-119, MAX_CONTEXT=250). The DEFAULT
-    is the reference's windowed mode (MAX_CONTEXT=250): the reference
-    itself switches to windowed/Document disambiguation for long inputs
-    (DBTwoStepDisambiguator.scala:72,89-119; the REST layer flips at
-    >1200 chars, SpotlightInterface.java:150-155), short documents fit in
-    one window so their scores are bit-identical to whole-doc scoring,
-    and per-window context vectors are the bounded-state plan at the
-    10^12-doc scale (measured 25-40%% faster than whole-doc at sf0.1).
-    Pass max_context_tokens=None to force whole-document scoring.
+
+    Context scoring (D2, ref DBTwoStepDisambiguator.scala:72,89-119) keys
+    every context vector on (doc_id, window_id). A token's window is
+    ordinal // max_context_tokens; a spot takes the window of the last
+    token at or before its offset. max_context_tokens=None (or 0) puts each
+    whole document in window 0 through the same plan (context_window).
+    Documents of at most max_context_tokens tokens score exactly as whole
+    documents. Deviation: the windows are fixed runs of 250 token
+    ordinals by default, while the reference accumulates whole sentences
+    until a window holds MAX_CONTEXT=250 tokens
+    (DBTwoStepDisambiguator.scala:102).
+
     `spots` injects a pre-computed spot table (SPOTS_SCHEMA) in place of the
     built-in spotters — the reference's pluggable-Spotter seam
     (rest/.../SpotlightInterface.java:124-137 takes any Spotter impl).
+    `tokens` injects the tokens table (TOKENS_SCHEMA). With use_context,
+    injected tables must carry `ordinal`: a token's rank by offset within
+    its document, and for a spot the ordinal of the last token at or before
+    its offset (0 when none). The use_context=False path does not read it.
     `dictionary` injects a persisted SpotterDictionary (built once at
     model-build time, SpotterDictionary.save/load) so repeated annotate
     jobs skip the driver-side FSA build.
@@ -116,29 +121,17 @@ def annotate(
     spot_cands = generate_candidates(
         spots, model.surface_forms, model.candidates, heads=heads
     )
-    if use_context and tokens is None:
-        tokens = tokenize_documents(documents, stopwords=stopwords).repartition(
-            "doc_id"
-        )
-    elif not use_context:
+    if use_context:
+        if tokens is None:
+            tokens = tokenize_documents(documents, stopwords=stopwords).repartition(
+                "doc_id"
+            )
+        window = context_window(max_context_tokens)
+        tokens = tokens.withColumn("window_id", window)
+        spot_cands = spot_cands.withColumn("window_id", window)
+    else:
         tokens = None
-    ctx_col = "doc_id"
-    if use_context and max_context_tokens:
-        tokens, spot_cands = attach_context_windows(
-            tokens, spot_cands, max_context_tokens
-        )
-        # Same fork discipline as the spots/tokens subtrees above: the
-        # attach outputs embed the window-assignment sub-DAG and feed
-        # several scoring branches (candidate scoring, cand_pairs
-        # distinct, NIL spot scores / query vectors) — without an
-        # exchange at the fork the assignment recomputes once per
-        # branch. The repartition makes it one ReuseExchange'd pass.
-        tokens = tokens.repartition("ctx_id")
-        spot_cands = spot_cands.repartition("doc_id")
-        ctx_col = "ctx_id"
-    scored = score_candidates(
-        spot_cands, tokens, model, use_context=use_context, ctx_col=ctx_col
-    )
+    scored = score_candidates(spot_cands, tokens, model, use_context=use_context)
     ranked = best_k(scored, k=max(k, 1))
     out = ranked if k > 1 else disambiguate_best(ranked)
     out = out.select(*[c for c in ANNOTATION_COLS if c in out.columns], "rank")

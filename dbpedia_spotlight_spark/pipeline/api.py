@@ -16,6 +16,7 @@ pipeline.triples / to_json).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.model.model_tables import SpotlightModel
 from dbpedia_spotlight_spark.operators.candidates import generate_candidates
@@ -56,9 +57,16 @@ def disambiguate(
 ) -> DataFrame:
     """/disambiguate — caller supplies the spots (the reference accepts
     SpotXmlParser input, io/sources.parse_spot_xml); only candidate
-    generation + scoring runs (rest/.../resources/Disambiguate.java)."""
-    spot_cands = generate_candidates(spots, model.surface_forms, model.candidates)
-    tokens = tokenize_documents(documents) if use_context else None
+    generation + scoring runs (rest/.../resources/Disambiguate.java).
+    Context scoring is whole-document: every spot and token is in window 0."""
+    spot_cands = generate_candidates(
+        spots, model.surface_forms, model.candidates
+    ).withColumn("window_id", F.lit(0))
+    tokens = (
+        tokenize_documents(documents).withColumn("window_id", F.lit(0))
+        if use_context
+        else None
+    )
     scored = score_candidates(spot_cands, tokens, model, use_context=use_context)
     return disambiguate_best(best_k(scored, k=1))
 

@@ -170,8 +170,9 @@ def test_docgen_interleaved_feeds_the_spotter(spark):
 
 def test_spotlight_tsv_overwrite_clears_stale_parts(spark, tmp_path):
     """r4 advisory: mode(overwrite) must clear part files a previous
-    wider write left behind (phantom rows), and job commit sweeps .tmp
-    leftovers from retried tasks."""
+    wider write left behind (phantom rows), and job commit sweeps the
+    .tmp leftovers of its own partitions only: a .tmp under another name
+    may be a live task file of another writer and must survive."""
     import os
 
     from dbpedia_spotlight_spark.io.datasource import register_sources
@@ -191,14 +192,26 @@ def test_spotlight_tsv_overwrite_clears_stale_parts(spark, tmp_path):
     )
     assert n_parts_before >= 2
 
-    # leftover tmp from a hypothetical dead task
-    with open(os.path.join(out, "part-09999.tsv.tmp"), "w") as fh:
+    # a .tmp of a partition number this job does not have: not its own
+    foreign = os.path.join(out, "part-09999.tsv.tmp")
+    with open(foreign, "w") as fh:
         fh.write("junk\tx\tx\tx\t0\n")
 
     narrow = spark.createDataFrame([("n1", "U2", "sf", "t", 0)], schema)
     narrow.coalesce(1).write.format("spotlight_tsv").mode("overwrite").save(out)
 
     files = os.listdir(out)
-    assert not any(f.endswith(".tmp") for f in files), files
+    assert [f for f in files if f.endswith(".tmp")] == ["part-09999.tsv.tmp"], files
     back = spark.read.format("spotlight_tsv").load(out).collect()
     assert sorted(r["occ_id"] for r in back) == ["n1"], files
+
+    # leftover tmp of this job's own partition (a retried task's) is swept
+    from dbpedia_spotlight_spark.io.datasource import TsvWriter, _TsvCommit
+
+    own = os.path.join(out, "part-00000.tsv.tmp")
+    with open(own, "w") as fh:
+        fh.write("junk\tx\tx\tx\t0\n")
+    part = os.path.join(out, "part-00000.tsv")
+    TsvWriter({"path": out}, overwrite=True).commit([_TsvCommit(part, 1)])
+    assert not os.path.exists(own) and os.path.exists(foreign)
+    assert os.path.exists(part)

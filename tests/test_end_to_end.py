@@ -1,6 +1,9 @@
 """Golden end-to-end: annotate the fixture corpus, check P/R >= 0.95 vs
 gold-by-construction, span-sequence invariant, filters, checkpoint/resume."""
 
+import collections
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -106,6 +109,39 @@ def test_context_windowed_annotate(world):
                    max_context_tokens=250)
     m = linking_metrics(ann, world.gold, redirects=world.model.redirects)
     assert m["precision"] >= 0.9 and m["recall"] >= 0.9, m
+
+
+def test_windowed_and_whole_document_annotate_are_one_plan(world):
+    """Every fixture doc fits one 250-token window, so windowed and
+    whole-document annotate return the same rows; and both modes execute
+    one plan: the same number of Exchange, Window and Python-scan nodes
+    (window ids come from the analysis UDFs' ordinals, not from extra
+    relational passes in one mode only)."""
+    from dbpedia_spotlight_spark.operators.tokenizer import tokenize_documents
+
+    longest = (
+        tokenize_documents(world.documents).groupBy("doc_id").count()
+        .agg(F.max("count")).first()[0]
+    )
+    assert longest <= 250
+
+    def run(max_context_tokens):
+        df = annotate(world.documents, world.model,
+                      max_context_tokens=max_context_tokens)
+        rows = sorted(df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = collections.Counter(
+            re.match(r"[\s:+\-]*(\w*)", line).group(1)
+            for line in plan.splitlines()
+        )
+        return rows, {k: nodes[k] for k in
+                      ("Exchange", "ReusedExchange", "Window", "MapInPandas")}
+
+    windowed_rows, windowed_plan = run(250)
+    whole_rows, whole_plan = run(None)
+    assert windowed_rows and windowed_rows == whole_rows
+    assert windowed_plan["MapInPandas"] > 0
+    assert windowed_plan == whole_plan
 
 
 def test_annotate_plan_reuses_spot_exchange(world):

@@ -2,6 +2,8 @@
 
 import hashlib
 
+import pytest
+
 from dbpedia_spotlight_spark.operators.graph import (
     deterministic_walks,
     katz_centrality,
@@ -554,6 +556,22 @@ def test_closeness_sampled_exact_at_full_pivots(spark):
         assert abs(s.total_dist - float(ex.total_dist)) < 1e-9
         assert abs(s.closeness - ex.closeness) < 1e-9
         assert abs(s.harmonic - ex.harmonic) < 1e-9
+
+
+def test_closeness_sampled_needs_two_pivots(spark):
+    """With one pivot the pivot's own scale (n-1)/(k-1) divides by zero
+    and its closeness would silently read 0.0: k < 2 raises, like
+    betweenness, also when the graph has a single node to draw from."""
+    from dbpedia_spotlight_spark.operators.graph import closeness_centrality
+
+    e = _circulant(spark, n=12)
+    for k in (0, 1):
+        with pytest.raises(ValueError, match=">= 2 pivots"):
+            closeness_centrality(e, sample_sources=k)
+    loop = spark.createDataFrame([(1, 1)], "src long, dst long")
+    with pytest.raises(ValueError, match=">= 2 pivots"):
+        closeness_centrality(loop, sample_sources=5)
+    assert closeness_centrality(e, sample_sources=2).count() == 12
 
 
 def test_closeness_sampled_error_bound(spark):

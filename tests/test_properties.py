@@ -347,25 +347,47 @@ def test_blend_scores_equals_global_percent_rank_window(spark):
     assert got == want  # exact equality, not approx
 
 
-def test_attach_windows_matches_bruteforce_assignment(spark):
-    """r5 rewrite pin: the union+last() spot assignment equals the
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.integers(0, 40), max_size=30), st.integers(-5, 45))
+def test_offset_ordinals_rank_by_offset(offsets, probe):
+    """offset_ordinals is the stable rank by offset (what a row_number
+    over offset computes, ties in emission order), for spans emitted in
+    any offset order; spot_ordinal is the rank of the last token at or
+    before the probe offset, else 0."""
+    from dbpedia_spotlight_spark.operators.tokenizer import (
+        offset_ordinals,
+        spot_ordinal,
+    )
+
+    ranks = offset_ordinals(offsets)
+    stable = sorted(range(len(offsets)), key=lambda i: (offsets[i], i))
+    assert ranks == [stable.index(i) for i in range(len(offsets))]
+    at_or_before = [r for r, i in enumerate(stable) if offsets[i] <= probe]
+    want = at_or_before[-1] if at_or_before else 0
+    assert spot_ordinal(sorted(offsets), probe) == want
+
+
+def test_spot_window_matches_bruteforce_assignment(spark):
+    """A spot's window (spot_ordinal, then context_window) equals the
     brute-force definition (last window whose start offset <= spot
     offset, else first window) on randomized token/spot layouts,
     including spots at offsets that are not token offsets."""
     import random
 
-    from dbpedia_spotlight_spark.operators.disambiguate import (
-        attach_context_windows,
+    from dbpedia_spotlight_spark.operators.disambiguate import context_window
+    from dbpedia_spotlight_spark.operators.tokenizer import (
+        offset_ordinals,
+        spot_ordinal,
     )
 
     rng = random.Random(7)
-    tok_rows, spot_rows, docs = [], [], {}
+    spot_rows, docs = [], {}
     for d in range(25):
         doc = f"doc{d:02d}"
         n_tok = rng.randint(1, 23)
         offsets = sorted(rng.sample(range(0, 400), n_tok))
         docs[doc] = offsets
-        tok_rows += [(doc, o) for o in offsets]
+        assert offset_ordinals(offsets) == list(range(n_tok))
         for _ in range(rng.randint(1, 6)):
             # half aligned to a token, half arbitrary (incl. before first)
             off = (
@@ -373,22 +395,57 @@ def test_attach_windows_matches_bruteforce_assignment(spark):
                 if rng.random() < 0.5
                 else rng.randint(0, 410)
             )
-            spot_rows.append((doc, 0, off, "sf"))
-    tokens = spark.createDataFrame(tok_rows, "doc_id string, offset int")
+            spot_rows.append((doc, 0, off, "sf", spot_ordinal(offsets, off)))
     spots = spark.createDataFrame(
-        spot_rows, "doc_id string, span_pos int, offset int, surface_form string"
-    )
+        spot_rows,
+        "doc_id string, span_pos int, offset int, surface_form string, ordinal int",
+    ).distinct()
     W = 5
-    _tk, sp = attach_context_windows(tokens, spots, max_tokens=W)
-    got = {(r["doc_id"], r["offset"]): r["ctx_id"] for r in sp.collect()}
+    sp = spots.withColumn("window_id", context_window(W))
+    got = {(r["doc_id"], r["offset"]): r["window_id"] for r in sp.collect()}
 
-    for (doc, off), ctx in got.items():
+    for (doc, off), wid in got.items():
         offsets = docs[doc]
         starts = [
             (offsets[i], i // W) for i in range(0, len(offsets)) if i % W == 0
         ]
-        eligible = [wid for (s, wid) in starts if s <= off]
+        eligible = [w for (s, w) in starts if s <= off]
         want_wid = eligible[-1] if eligible else starts[0][1]
-        assert ctx == f"{doc}#{want_wid}", (doc, off, ctx, starts)
+        assert wid == want_wid, (doc, off, wid, starts)
     # every spot got exactly one window
-    assert len(got) == len({(r[0], r[2]) for r in spot_rows})
+    assert sp.count() == len(got) == len({(r[0], r[2]) for r in spot_rows})
+
+
+def test_analysis_ordinals_give_bruteforce_windows(spark, world):
+    """On the fixture text, tokenize_documents numbers each document's
+    tokens 0..n-1 in offset order, and the ordinals spot_documents emits
+    (FSA and Aho-Corasick) put every spot in the brute-force window: the
+    last window whose start offset <= the spot's, else the first."""
+    from dbpedia_spotlight_spark.operators.spotter import spot_documents
+    from dbpedia_spotlight_spark.operators.tokenizer import (
+        offset_ordinals,
+        tokenize_documents,
+    )
+
+    docs = world.documents
+    toks: dict = {}
+    for r in tokenize_documents(docs).select("doc_id", "offset", "ordinal").collect():
+        toks.setdefault(r["doc_id"], []).append((r["ordinal"], r["offset"]))
+    offsets = {}
+    for doc, pairs in toks.items():
+        pairs.sort()
+        assert [o for o, _ in pairs] == list(range(len(pairs))), doc
+        offsets[doc] = [off for _, off in pairs]
+        assert offset_ordinals(offsets[doc]) == list(range(len(pairs)))
+    checked = 0
+    for spotter in ("fsa", "ahocorasick"):
+        spots = spot_documents(docs, world.model.surface_forms, spotter=spotter)
+        for r in spots.select("doc_id", "offset", "ordinal").collect():
+            offs = offsets[r["doc_id"]]
+            for W in (4, 10, 250):
+                starts = [(offs[i], i // W) for i in range(0, len(offs), W)]
+                eligible = [w for s, w in starts if s <= r["offset"]]
+                want = eligible[-1] if eligible else starts[0][1]
+                assert r["ordinal"] // W == want, (spotter, r, W)
+            checked += 1
+    assert checked > 100

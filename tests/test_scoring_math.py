@@ -10,6 +10,7 @@ from dbpedia_spotlight_spark.operators.disambiguate import (
     LAMBDA,
     build_query_vectors,
     context_scores,
+    context_window,
     nil_context_scores,
 )
 from dbpedia_spotlight_spark.operators.tokenizer import flat_to_interleaved, tokenize_documents
@@ -75,13 +76,13 @@ def _model_rows(model):
 def test_context_scores_match_hand_math(spark, model):
     text = "iphone mac company fruit tree celebrity report"
     docs = flat_to_interleaved(spark.createDataFrame([("d1", text)], "doc_id string, text string"))
-    tokens = tokenize_documents(docs)
+    tokens = tokenize_documents(docs).withColumn("window_id", context_window(250))
     query = build_query_vectors(tokens, model)
 
     res = {r["uri"]: r["res_id"] for r in model.resources.collect()}
     cand_pairs = spark.createDataFrame(
-        [("d1", res["Apple_Inc"]), ("d1", res["Apple"]), ("d1", res["Paris"])],
-        "doc_id string, res_id int",
+        [("d1", 0, res[uri]) for uri in ("Apple_Inc", "Apple", "Paris")],
+        "doc_id string, window_id int, res_id int",
     )
     got = {
         r["res_id"]: r["p_c"]
@@ -105,7 +106,8 @@ def test_query_vector_counts(spark, model):
         spark.createDataFrame([("d1", "iphone iphone mac unknownword")],
                               "doc_id string, text string")
     )
-    q = build_query_vectors(tokenize_documents(docs), model).collect()
+    tokens = tokenize_documents(docs).withColumn("window_id", context_window(250))
+    q = build_query_vectors(tokens, model).collect()
     by_tok = {}
     vocab = {r["token_id"]: r["token"] for r in model.token_types.collect()}
     for r in q:

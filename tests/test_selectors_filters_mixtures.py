@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.operators.disambiguate import (
-    attach_context_windows,
+    context_window,
     tficf_scores,
 )
 from dbpedia_spotlight_spark.operators.mixtures import (
@@ -176,9 +176,12 @@ def test_tficf_scores(spark, world):
         context_counts=ctx,
     )
     query = spark.createDataFrame(
-        [("q", 1, 2.0), ("q", 9, 1.0)], "doc_id string, token_id int, c double"
+        [("q", 0, 1, 2.0), ("q", 0, 9, 1.0)],
+        "doc_id string, window_id int, token_id int, c double",
     )
-    pairs = spark.createDataFrame([("q", 0), ("q", 1)], "doc_id string, res_id int")
+    pairs = spark.createDataFrame(
+        [("q", 0, 0), ("q", 0, 1)], "doc_id string, window_id int, res_id int"
+    )
     got = {r["res_id"]: r["tficf"] for r in tficf_scores(query, pairs, model).collect()}
     # token 1: tf(A)=5, icf=log(2/1)+1; norm(A)=2 distinct tokens
     expect_a = 5 * (math.log(2.0) + 1.0) / 2
@@ -186,22 +189,37 @@ def test_tficf_scores(spark, world):
     assert got[1] == 0.0  # B's context shares no query token
 
 
+def _windowed(spark, toks, spots, max_tokens):
+    """Tokens (doc_id, offset, stem) and spots (doc_id, span_pos, offset,
+    surface_form) with the analysis UDFs' ordinals and their window_id."""
+    from dbpedia_spotlight_spark.operators.tokenizer import (
+        offset_ordinals,
+        spot_ordinal,
+    )
+
+    offsets = [o for _, o, _ in toks]
+    tk = spark.createDataFrame(
+        [(*t, n) for t, n in zip(toks, offset_ordinals(offsets))],
+        "doc_id string, offset int, stem string, ordinal int",
+    )
+    sp = spark.createDataFrame(
+        [(*s, spot_ordinal(sorted(offsets), s[2])) for s in spots],
+        "doc_id string, span_pos int, offset int, surface_form string, ordinal int",
+    )
+    window = context_window(max_tokens)
+    return tk.withColumn("window_id", window), sp.withColumn("window_id", window)
+
+
 def test_context_windowing(spark):
-    toks = spark.createDataFrame(
-        [("d1", i * 10, f"t{i}", False) for i in range(10)],
-        "doc_id string, offset int, stem string, is_stopword boolean",
-    )
-    spots = spark.createDataFrame(
-        [("d1", 0, 0, "x"), ("d1", 0, 55, "y"), ("d1", 0, 90, "z")],
-        "doc_id string, span_pos int, offset int, surface_form string",
-    )
-    tk, sp = attach_context_windows(toks, spots, max_tokens=4)
-    wins = {r["stem"]: r["ctx_id"] for r in tk.collect()}
-    assert wins["t0"] == "d1#0" and wins["t3"] == "d1#0"
-    assert wins["t4"] == "d1#1" and wins["t9"] == "d1#2"
-    spot_wins = {r["offset"]: r["ctx_id"] for r in sp.collect()}
+    toks = [("d1", i * 10, f"t{i}") for i in range(10)]
+    spots = [("d1", 0, 0, "x"), ("d1", 0, 55, "y"), ("d1", 0, 90, "z")]
+    tk, sp = _windowed(spark, toks, spots, max_tokens=4)
+    wins = {r["stem"]: r["window_id"] for r in tk.collect()}
+    assert wins["t0"] == 0 and wins["t3"] == 0
+    assert wins["t4"] == 1 and wins["t9"] == 2
+    spot_wins = {r["offset"]: r["window_id"] for r in sp.collect()}
     # offset 0 -> window 0 (toks 0-30); 55 inside window 1 (40-70); 90 -> window 2
-    assert spot_wins == {0: "d1#0", 55: "d1#1", 90: "d1#2"}
+    assert spot_wins == {0: 0, 55: 1, 90: 2}
     assert sp.count() == 3  # exactly one window per spot
 
 
@@ -302,30 +320,19 @@ def test_context_windowing_long_doc_reference_default(spark):
     start <= its offset, and a windowed-scoring run sees per-window, not
     whole-doc, context ids (the round-3 item #7 long-doc fixture)."""
     n = 600
-    toks = spark.createDataFrame(
-        [("long", i * 5, f"w{i}", False) for i in range(n)],
-        "doc_id string, offset int, stem string, is_stopword boolean",
-    )
-    spots = spark.createDataFrame(
-        [
-            ("long", 0, 0, "a"),          # first token -> window 0
-            ("long", 0, 249 * 5, "b"),    # last token of window 0
-            ("long", 0, 250 * 5, "c"),    # first token of window 1
-            ("long", 0, 599 * 5, "d"),    # last token -> window 2
-        ],
-        "doc_id string, span_pos int, offset int, surface_form string",
-    )
-    tk, sp = attach_context_windows(toks, spots, max_tokens=250)
-    assert tk.select("ctx_id").distinct().count() == 3
+    toks = [("long", i * 5, f"w{i}") for i in range(n)]
+    spots = [
+        ("long", 0, 0, "a"),          # first token -> window 0
+        ("long", 0, 249 * 5, "b"),    # last token of window 0
+        ("long", 0, 250 * 5, "c"),    # first token of window 1
+        ("long", 0, 599 * 5, "d"),    # last token -> window 2
+    ]
+    tk, sp = _windowed(spark, toks, spots, max_tokens=250)
+    assert tk.select("window_id").distinct().count() == 3
     sizes = {
-        r["ctx_id"]: r["n"]
-        for r in tk.groupBy("ctx_id").agg(F.count("*").alias("n")).collect()
+        r["window_id"]: r["n"]
+        for r in tk.groupBy("window_id").agg(F.count("*").alias("n")).collect()
     }
-    assert sizes == {"long#0": 250, "long#1": 250, "long#2": 100}
-    spot_wins = {r["offset"]: r["ctx_id"] for r in sp.collect()}
-    assert spot_wins == {
-        0: "long#0",
-        249 * 5: "long#0",
-        250 * 5: "long#1",
-        599 * 5: "long#2",
-    }
+    assert sizes == {0: 250, 1: 250, 2: 100}
+    spot_wins = {r["offset"]: r["window_id"] for r in sp.collect()}
+    assert spot_wins == {0: 0, 249 * 5: 0, 250 * 5: 1, 599 * 5: 2}
