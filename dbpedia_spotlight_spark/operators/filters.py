@@ -74,66 +74,54 @@ def sparql_filter(df: DataFrame, uris: DataFrame, policy: str = "whitelist") -> 
     return df.join(F.broadcast(uri_df), "uri", how)
 
 
+# What a coreferent mention inherits from its antecedent.
+INHERITED = (
+    "uri",
+    "res_id",
+    "support",
+    "types",
+    "similarity_score",
+    "percentage_second_rank",
+    "contextual_score",
+)
+
+
 def coreference_filter(df: DataFrame) -> DataFrame:
     """F6: single-word surface form whose word appears inside an earlier
     multi-word all-uppercase-initial surface form in the same doc inherits
     that occurrence's resource (ref CoreferenceFilter.scala:28-79).
 
-    Relational form: self-join annotations on doc_id with offset_prev <
-    offset, word containment + casing conditions; earliest antecedent wins.
+    Relational form: one window per doc_id, ordered by offset, collects the
+    strictly earlier antecedents (across span_pos); a single word takes
+    the earliest one whose words contain it. Each antecedent is a struct
+    led by its offset, so array_min picks the earliest. Output: doc_id,
+    span_pos, offset, surface_form and the INHERITED columns.
     """
-    base = df
-    single = base.filter(~F.col("surface_form").contains(" ")).alias("s")
-    multi = (
-        base.filter(F.col("surface_form").contains(" "))
-        # every word starts uppercase (ref isCoreferent :71-79)
-        .filter(
-            F.forall(
-                F.split(F.col("surface_form"), " "),
-                lambda w: w.rlike("^[A-Z]"),
-            )
-        )
-        .alias("m")
+    sf = F.col("surface_form")
+    words = F.split(sf, " ")
+    # multi-word, every word starts uppercase (ref isCoreferent :71-79)
+    is_antecedent = sf.contains(" ") & F.forall(words, lambda w: w.rlike("^[A-Z]"))
+    antecedent = F.struct(
+        F.col("offset"), words.alias("words"), *[F.col(c) for c in INHERITED]
     )
-    matches = single.join(
-        multi,
-        (F.col("s.doc_id") == F.col("m.doc_id"))
-        & (F.col("m.offset") < F.col("s.offset"))
-        & (
-            F.array_contains(
-                F.split(F.col("m.surface_form"), " "), F.col("s.surface_form")
-            )
-        ),
-        "inner",
+    earlier = (
+        Window.partitionBy("doc_id")
+        .orderBy("offset")
+        .rangeBetween(Window.unboundedPreceding, -1)
     )
-    w = Window.partitionBy(
-        "s.doc_id", "s.span_pos", "s.offset"
-    ).orderBy(F.asc("m.offset"))
-    resolved = (
-        matches.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("s.doc_id").alias("doc_id"),
-            F.col("s.span_pos").alias("span_pos"),
-            F.col("s.offset").alias("offset"),
-            F.col("s.surface_form").alias("surface_form"),
-            # inherit the antecedent's resource + scores
-            F.col("m.uri").alias("uri"),
-            F.col("m.res_id").alias("res_id"),
-            F.col("m.support").alias("support"),
-            F.col("m.types").alias("types"),
-            F.col("m.similarity_score").alias("similarity_score"),
-            F.col("m.percentage_second_rank").alias("percentage_second_rank"),
-            F.col("m.contextual_score").alias("contextual_score"),
-        )
+    antecedents = F.collect_list(F.when(is_antecedent, antecedent)).over(earlier)
+    hit = F.when(
+        ~sf.contains(" "),
+        F.array_min(F.filter(antecedents, lambda a: F.array_contains(a["words"], sf))),
     )
-    keep_cols = resolved.columns
-    unchanged = base.select(*keep_cols).join(
-        resolved.select("doc_id", "span_pos", "offset"),
-        ["doc_id", "span_pos", "offset"],
-        "left_anti",
+    # not coalesce: an antecedent's null `types` must win
+    inherit = [
+        F.when(F.col("_hit").isNotNull(), F.col("_hit")[c]).otherwise(F.col(c)).alias(c)
+        for c in INHERITED
+    ]
+    return df.withColumn("_hit", hit).select(
+        "doc_id", "span_pos", "offset", "surface_form", *inherit
     )
-    return unchanged.unionByName(resolved)
 
 
 def apply_default_filter_chain(

@@ -9,7 +9,9 @@ Spark DAG:
     spots ⋈ surface_forms ⋈ candidates        (broadcast + two-stage skew join)
     ⋈ context_counts ⋈ query vectors -> agg   (shuffle on res_id / context)
     window rank / softmax                     (shuffle on spot key)
-    filters                                   (no shuffle)
+
+The filter step is operators/filters.apply_default_filter_chain, composed
+by the caller (api.annotate_endpoint, jobs/annotate_job.py).
 
 The four reference IRs (spot list, candidate map, context scores, ranked
 occurrences) are the intermediate DataFrames returned by the helpers, each
@@ -32,7 +34,6 @@ from dbpedia_spotlight_spark.operators.disambiguate import (
     disambiguate_best,
     score_candidates,
 )
-from dbpedia_spotlight_spark.operators.filters import apply_default_filter_chain
 from dbpedia_spotlight_spark.operators.spotter import spot_documents
 from dbpedia_spotlight_spark.operators.tokenizer import (
     DEFAULT_STOPWORDS,
@@ -58,11 +59,7 @@ def annotate(
     documents: DataFrame,
     model: SpotlightModel,
     use_context: bool = True,
-    apply_filters: bool = False,
-    confidence: float = 0.1,
-    support: int = 10,
     spotter: str = "fsa",
-    heads: list | None = None,
     k: int = 1,
     stopwords: frozenset = DEFAULT_STOPWORDS,
     max_context_tokens: int | None = 250,
@@ -73,7 +70,10 @@ def annotate(
     """documents(doc_id, spans) -> annotations (one row per linked mention).
 
     With k=1 this is the reference `disambiguate` (best per spot, ordered by
-    offset); with k>1 the bestK ranked lists (rank column retained).
+    offset); with k>1 the bestK ranked lists (rank column retained). No
+    filter runs here: the REST chain (F1-F6) is
+    `filters.apply_default_filter_chain(annotate(...), confidence=...,
+    support=...)`, as `api.annotate_endpoint` composes it.
 
     Context scoring (D2, ref DBTwoStepDisambiguator.scala:72,89-119) keys
     every context vector on (doc_id, window_id). A token's window is
@@ -105,18 +105,23 @@ def annotate(
             spotter=spotter,
             dictionary=dictionary,
         )
-    # Skew plan (north rule): heads=None auto-selects — small candidate
-    # tables broadcast whole; big ones switch to the two-stage
-    # broadcast(head)+shuffle(tail) join on the cached head-sf statistic.
-    # Pass heads=[] to force the single broadcast, or an explicit id list.
-    if heads is None and model.candidates_count > AUTO_BROADCAST_MAX:
-        heads = model.head_ids()
+    # Skew plan (north rule): small candidate tables broadcast whole; big
+    # ones switch to the two-stage broadcast(head)+shuffle(tail) join on
+    # the cached head-sf statistic.
+    heads = (
+        model.head_ids() if model.candidates_count > AUTO_BROADCAST_MAX else None
+    )
     # The spots/tokens subtrees are consumed by several downstream branches
     # (candidate join, NIL spot scores, context vectors). Without an exchange
     # at the fork, Spark recomputes the Python UDF scan once per branch
     # (~8x measured). A repartition on doc_id makes the fork an Exchange that
-    # ReuseExchange dedupes — the UDF runs exactly once per job, and the
-    # doc_id clustering feeds the downstream per-doc windows.
+    # ReuseExchange can dedupe, and the doc_id clustering feeds the
+    # downstream per-doc windows. The dedupe is partial: column pruning
+    # pushes each branch's Project below the repartition, so branches that
+    # keep different columns get different Exchanges and each runs the UDF
+    # (the spotter runs twice and the tokenizer once per job). Any
+    # `mapInPandas(...).repartition("doc_id")` read by two branches that
+    # prune differently does the same.
     spots = spots.repartition("doc_id")
     spot_cands = generate_candidates(
         spots, model.surface_forms, model.candidates, heads=heads
@@ -134,10 +139,7 @@ def annotate(
     scored = score_candidates(spot_cands, tokens, model, use_context=use_context)
     ranked = best_k(scored, k=max(k, 1))
     out = ranked if k > 1 else disambiguate_best(ranked)
-    out = out.select(*[c for c in ANNOTATION_COLS if c in out.columns], "rank")
-    if apply_filters:
-        out = apply_default_filter_chain(out, confidence=confidence, support=support)
-    return out
+    return out.select(*[c for c in ANNOTATION_COLS if c in out.columns], "rank")
 
 
 def verify_span_invariant(documents_in: DataFrame, documents_out: DataFrame) -> bool:

@@ -19,14 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dbpedia_spotlight_spark.model.model_tables import SpotlightModel
-from dbpedia_spotlight_spark.operators.candidates import generate_candidates
-from dbpedia_spotlight_spark.operators.disambiguate import (
-    best_k,
-    disambiguate_best,
-    score_candidates,
-)
+from dbpedia_spotlight_spark.operators.filters import apply_default_filter_chain
 from dbpedia_spotlight_spark.operators.spotter import spot_documents
-from dbpedia_spotlight_spark.operators.tokenizer import tokenize_documents
 from dbpedia_spotlight_spark.pipeline.annotate import annotate
 
 
@@ -58,17 +52,15 @@ def disambiguate(
     """/disambiguate — caller supplies the spots (the reference accepts
     SpotXmlParser input, io/sources.parse_spot_xml); only candidate
     generation + scoring runs (rest/.../resources/Disambiguate.java).
-    Context scoring is whole-document: every spot and token is in window 0."""
-    spot_cands = generate_candidates(
-        spots, model.surface_forms, model.candidates
-    ).withColumn("window_id", F.lit(0))
-    tokens = (
-        tokenize_documents(documents).withColumn("window_id", F.lit(0))
-        if use_context
-        else None
+    The spots carry no token ordinals, so context scoring is whole-document.
+    """
+    return annotate(
+        documents,
+        model,
+        use_context=use_context,
+        spots=spots.withColumn("ordinal", F.lit(0)),
+        max_context_tokens=None,
     )
-    scored = score_candidates(spot_cands, tokens, model, use_context=use_context)
-    return disambiguate_best(best_k(scored, k=1))
 
 
 def annotate_endpoint(
@@ -82,17 +74,8 @@ def annotate_endpoint(
     spotter: str = "fsa",
 ) -> DataFrame:
     """/annotate with the REST default filter chain applied."""
-    out = annotate(
-        documents,
-        model,
-        use_context=True,
-        apply_filters=False,
-        spotter=spotter,
-    )
-    from dbpedia_spotlight_spark.operators.filters import apply_default_filter_chain
-
     return apply_default_filter_chain(
-        out,
+        annotate(documents, model, use_context=True, spotter=spotter),
         confidence=confidence,
         support=support,
         types=types,

@@ -33,22 +33,19 @@ def annotation_triples(annotations: DataFrame, doc_prefix: str = "http://example
         F.lit(","),
         (F.col("offset") + F.length("surface_form")).cast("string"),
     )
-    ident = annotations.select(
+    objects = {
+        ITSRDF_TA_IDENT_REF: F.concat(F.lit(RESOURCE_PREFIX), F.col("uri")),
+        NIF_ANCHOR_OF: F.col("surface_form"),
+        ITSRDF_TA_CONFIDENCE: F.col("similarity_score").cast("string"),
+    }
+    # one pass over the annotations: each row explodes into its three triples
+    return annotations.select(
         span_uri.alias("subj"),
-        F.lit(ITSRDF_TA_IDENT_REF).alias("pred"),
-        F.concat(F.lit(RESOURCE_PREFIX), F.col("uri")).alias("obj"),
+        F.inline(F.array(*[
+            F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
+            for pred, obj in objects.items()
+        ])),
     )
-    anchor = annotations.select(
-        span_uri.alias("subj"),
-        F.lit(NIF_ANCHOR_OF).alias("pred"),
-        F.col("surface_form").alias("obj"),
-    )
-    conf = annotations.select(
-        span_uri.alias("subj"),
-        F.lit(ITSRDF_TA_CONFIDENCE).alias("pred"),
-        F.col("similarity_score").cast("string").alias("obj"),
-    )
-    return ident.unionByName(anchor).unionByName(conf)
 
 
 def write_triples(

@@ -6,11 +6,14 @@ materialize NIF mention triples, resumable from checkpoint.
         --input  /data/documents_parquet \
         --model  /models/spotlight \
         --output /out/annotations \
-        --num-buckets 64 --wave-size 8 [--no-context] [--flat-input]
+        --num-buckets 64 --wave-size 8 [--no-context] [--flat-input] \
+        [--confidence 0.1] [--support 10] [--triples]
 
 The input is either the north-rule interleaved schema
 (doc_id string, spans array<struct<kind,text,media_ref,offset>>) or, with
---flat-input, a flat (doc_id, text) table adapted on the fly. Each completed
+--flat-input, a flat (doc_id, text) table adapted on the fly. Each bucket
+wave runs annotate and then the REST default filter chain
+(apply_default_filter_chain with --confidence/--support). Each completed
 bucket wave appends lineage to <output>/_manifest/manifest.jsonl; a rerun
 skips completed buckets (kill -9 safe). Final metrics print as one JSON line.
 """
@@ -41,6 +44,7 @@ def main(argv=None) -> None:
     spark = SparkSession.builder.appName("spotlight-annotate").getOrCreate()
 
     from dbpedia_spotlight_spark.model.model_tables import SpotlightModel
+    from dbpedia_spotlight_spark.operators.filters import apply_default_filter_chain
     from dbpedia_spotlight_spark.operators.tokenizer import flat_to_interleaved
     from dbpedia_spotlight_spark.pipeline.annotate import annotate
     from dbpedia_spotlight_spark.pipeline.checkpoint import run_checkpointed
@@ -68,14 +72,15 @@ def main(argv=None) -> None:
     )
 
     def pipeline(subset):
-        return annotate(
-            subset,
-            model,
-            use_context=not args.no_context,
-            apply_filters=True,
+        return apply_default_filter_chain(
+            annotate(
+                subset,
+                model,
+                use_context=not args.no_context,
+                dictionary=dictionary,
+            ),
             confidence=args.confidence,
             support=args.support,
-            dictionary=dictionary,
         )
 
     metrics = run_checkpointed(

@@ -33,9 +33,14 @@ def test_disambiguate_endpoint_with_xml_spots(spark, world):
     spots, docs_flat = parse_spot_xml(spark, xml)
     from dbpedia_spotlight_spark.operators.tokenizer import flat_to_interleaved
 
+    from dbpedia_spotlight_spark.pipeline.annotate import ANNOTATION_COLS
+
     docs = flat_to_interleaved(docs_flat)
-    out = disambiguate(spots, docs, world.model, use_context=False).collect()
-    assert len(out) == 1 and out[0]["uri"] == "Berlin"
+    for use_context in (False, True):
+        out = disambiguate(spots, docs, world.model, use_context=use_context)
+        rows = out.collect()
+        assert len(rows) == 1 and rows[0]["uri"] == "Berlin"
+        assert out.columns == ANNOTATION_COLS + ["rank"]
 
 
 def test_annotate_endpoint_filters(world):

@@ -111,6 +111,15 @@ def test_context_windowed_annotate(world):
     assert m["precision"] >= 0.9 and m["recall"] >= 0.9, m
 
 
+def _final_plan_nodes(df) -> collections.Counter:
+    """Node names of `df`'s executed plan (final after an action under
+    AQE), each subtree counted under every place it appears."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return collections.Counter(
+        re.match(r"[\s:+\-]*(\w*)", line).group(1) for line in plan.splitlines()
+    )
+
+
 def test_windowed_and_whole_document_annotate_are_one_plan(world):
     """Every fixture doc fits one 250-token window, so windowed and
     whole-document annotate return the same rows; and both modes execute
@@ -129,11 +138,7 @@ def test_windowed_and_whole_document_annotate_are_one_plan(world):
         df = annotate(world.documents, world.model,
                       max_context_tokens=max_context_tokens)
         rows = sorted(df.collect())
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        nodes = collections.Counter(
-            re.match(r"[\s:+\-]*(\w*)", line).group(1)
-            for line in plan.splitlines()
-        )
+        nodes = _final_plan_nodes(df)
         return rows, {k: nodes[k] for k in
                       ("Exchange", "ReusedExchange", "Window", "MapInPandas")}
 
@@ -142,6 +147,19 @@ def test_windowed_and_whole_document_annotate_are_one_plan(world):
     assert windowed_rows and windowed_rows == whole_rows
     assert windowed_plan["MapInPandas"] > 0
     assert windowed_plan == whole_plan
+
+
+def test_filters_and_triples_read_annotations_once(world):
+    """The filter chain and the triple writer each read their input once,
+    so the Python scans of a lazy annotate() appear in the final plan of
+    annotate -> filters -> triples exactly as often as in annotate's own."""
+    ann = annotate(world.documents, world.model)
+    triples = annotation_triples(apply_default_filter_chain(ann))
+    ann.collect()
+    assert triples.collect()
+    ann_scans = _final_plan_nodes(ann)["MapInPandas"]
+    assert ann_scans > 0
+    assert _final_plan_nodes(triples)["MapInPandas"] == ann_scans
 
 
 def test_annotate_plan_reuses_spot_exchange(world):
