@@ -10,9 +10,9 @@ MAX_CANDIDATES=20 by prior P(e|s) (DBTwoStepDisambiguator.scala:69,145-151).
 Spark design (scale notes):
   - spots ⋈ surface_forms: equi-join on the sf string; surface_forms is a dim
     (millions of rows max) — broadcast by default.
-  - normalized fallback: LEFT-ANTI the hits, join misses on surface_form_norm
-    against a pre-aggregated "best per norm" dim (row_number tie-break on
-    annotated_count desc) — second broadcast join, then union.
+  - normalized fallback in the same pass: exact misses left-join a
+    pre-aggregated "best per norm" dim on surface_form_norm (row_number
+    tie-break on annotated_count desc) — second broadcast join.
   - spots ⋈ candidates: the skewed join (head sfs like "apple" have 20+
     candidates and huge occurrence counts). Two-stage plan per the north
     star: the head of the candidate map (top sf_ids by pair fanout ×
@@ -35,6 +35,8 @@ MAX_CANDIDATES = 20  # ref DBTwoStepDisambiguator.scala:69
 # broadcast(head)+shuffle(tail) plan automatically.
 AUTO_BROADCAST_MAX = 2_000_000
 
+SF_COLS = ["sf_id", "annotated_count", "total_count"]
+
 
 def resolve_surface_forms(spots: DataFrame, surface_forms: DataFrame) -> DataFrame:
     """Attach (sf_id, annotated_count, total_count) to spots; unresolved spots
@@ -43,17 +45,8 @@ def resolve_surface_forms(spots: DataFrame, surface_forms: DataFrame) -> DataFra
     spot text in getSurfaceFormNormalized, MemorySurfaceFormStore.scala:105-116).
     """
     sf_dim = F.broadcast(
-        surface_forms.select(
-            F.col("surface_form").alias("_sf_key"),
-            "sf_id",
-            "annotated_count",
-            "total_count",
-        )
+        surface_forms.select(F.col("surface_form").alias("_sf_key"), *SF_COLS)
     )
-    exact = spots.join(sf_dim, spots["surface_form"] == sf_dim["_sf_key"], "left")
-
-    hits = exact.filter(F.col("sf_id").isNotNull()).drop("_sf_key")
-
     # Pre-aggregate: best sf per normalized key (highest annotated_count;
     # res: MemorySurfaceFormStore.scala:77-79), deterministic tie on sf_id.
     w = Window.partitionBy("surface_form_norm").orderBy(
@@ -64,22 +57,21 @@ def resolve_surface_forms(spots: DataFrame, surface_forms: DataFrame) -> DataFra
         .filter(F.col("_rn") == 1)
         .select(
             F.col("surface_form_norm").alias("_norm_key"),
-            F.col("sf_id").alias("_n_sf_id"),
-            F.col("annotated_count").alias("_n_annotated"),
-            F.col("total_count").alias("_n_total"),
+            *[F.col(c).alias(f"_n_{c}") for c in SF_COLS],
         )
     )
-    misses = (
-        exact.filter(F.col("sf_id").isNull())
-        .drop("_sf_key", "sf_id", "annotated_count", "total_count")
-        .withColumn("_norm", normalize_surface_form_col(F.col("surface_form")))
-        .join(norm_dim, F.col("_norm") == F.col("_norm_key"), "inner")
-        .withColumn("sf_id", F.col("_n_sf_id"))
-        .withColumn("annotated_count", F.col("_n_annotated"))
-        .withColumn("total_count", F.col("_n_total"))
-        .drop("_norm", "_norm_key", "_n_sf_id", "_n_annotated", "_n_total")
+    hit = F.col("sf_id").isNotNull()
+    # null for exact hits: only misses are normalized, and a null key never matches
+    norm = F.when(~hit, normalize_surface_form_col(F.col("surface_form")))
+    resolved = [
+        F.when(hit, F.col(c)).otherwise(F.col(f"_n_{c}")).alias(c) for c in SF_COLS
+    ]
+    return (
+        spots.join(sf_dim, spots["surface_form"] == sf_dim["_sf_key"], "left")
+        .join(norm_dim, norm == F.col("_norm_key"), "left")
+        .select(*spots.columns, *resolved)
+        .filter(F.col("sf_id").isNotNull())
     )
-    return hits.unionByName(misses)
 
 
 def head_sf_ids(candidates: DataFrame, top_n: int = 1000) -> list:

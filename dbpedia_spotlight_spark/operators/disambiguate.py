@@ -24,7 +24,9 @@ algebraic identity
 
 means only *present* (token, resource) pairs are ever joined — absent pairs
 contribute exactly their nilScore term, folded in as a per-context scalar
-column.
+column. Each aggregate is computed once and left-joined straight onto the
+candidate rows (context_scores). The join state that remains is pairs ⋈
+context_counts, before the query join keeps the present tokens.
 No cross product, no UDF: the whole scoring stage is joins + groupBy sums
 that stay inside whole-stage codegen.
 """
@@ -95,26 +97,32 @@ def nil_context_scores(query: DataFrame) -> DataFrame:
 
 def context_scores(
     query: DataFrame,
-    cand_pairs: DataFrame,
+    cands: DataFrame,
     model: SpotlightModel,
 ) -> DataFrame:
-    """D3/D4: P(c|e) per (doc_id, window_id, res_id).
+    """D3-D5: attach p_c = P(c|e) and the context's nil_context_score to
+    rows keyed by (doc_id, window_id, res_id), which may repeat a key.
 
-    cand_pairs: distinct (doc_id, window_id, res_id). Resources without any
-    context vector score NaN in the reference (0/0 division,
-    GenerativeContextSimilarity.scala:53-57) and are later dropped; here they
-    get a null p_c (same downstream effect).
+    Resources without any context vector score NaN in the reference (0/0
+    division, GenerativeContextSimilarity.scala:53-57) and are later
+    dropped; here they get a null p_c (same downstream effect). A context
+    with no vocabulary token gets nil_context_score 0.
     """
-    totals = model.resource_token_totals()  # (res_id, total_count)
-    nil_doc = nil_context_scores(query)
-
+    # renamed: candidate rows carry the surface form's total_count
+    totals = F.broadcast(
+        model.resource_token_totals().withColumnRenamed("total_count", "_res_total")
+    )
+    # The hinted shuffle hash join keeps the plan the same from run to run:
+    # left to AQE it became a broadcast join, or not, by which side's stage
+    # finished first.
     present = (
-        cand_pairs.join(model.context_counts, "res_id", "inner")
-        .join(query, [*CTX_KEY, "token_id"], "inner")
+        cands.select(*CTX_KEY, "res_id").distinct()
+        .join(model.context_counts, "res_id", "inner")
+        .join(query.hint("shuffle_hash"), [*CTX_KEY, "token_id"], "inner")
         .join(totals, "res_id", "inner")
     )
     # delta = p(t,e) - (log(1-λ)+pLM): the present-pair correction term
-    ml = F.col("count") / F.col("total_count")
+    ml = F.col("count") / F.col("_res_total")
     p_te = logaddexp(
         F.lit(LOG_LAMBDA) + F.log(ml), F.lit(LOG_1M_LAMBDA) + F.col("plm")
     )
@@ -122,19 +130,22 @@ def context_scores(
         "_delta", p_te - (F.lit(LOG_1M_LAMBDA) + F.col("plm"))
     ).groupBy(*CTX_KEY, "res_id").agg(F.sum("_delta").alias("_sum_delta"))
 
-    has_context = totals.filter(F.col("total_count") > 0).select("res_id")
     return (
-        cand_pairs.join(F.broadcast(has_context), "res_id", "left_semi")
-        .join(deltas, [*CTX_KEY, "res_id"], "left")
-        .join(nil_doc, CTX_KEY, "left")
-        .select(
-            *CTX_KEY,
-            "res_id",
-            (
-                F.coalesce(F.col("_sum_delta"), F.lit(0.0))
-                + F.coalesce(F.col("nil_context_score"), F.lit(0.0))
-            ).alias("p_c"),
+        cands.join(deltas, [*CTX_KEY, "res_id"], "left")
+        .join(nil_context_scores(query), CTX_KEY, "left")
+        .join(totals, "res_id", "left")
+        .withColumn(
+            "nil_context_score", F.coalesce(F.col("nil_context_score"), F.lit(0.0))
         )
+        .withColumn(
+            "p_c",
+            F.when(
+                F.col("_res_total") > 0,
+                F.coalesce(F.col("_sum_delta"), F.lit(0.0))
+                + F.col("nil_context_score"),
+            ),
+        )
+        .drop("_sum_delta", "_res_total")
     )
 
 
@@ -198,20 +209,9 @@ def score_candidates(
     df = df.withColumn("p_e", p_e).withColumn("p_s_given_e", p_s)
 
     if use_context and model.context_counts is not None and tokens is not None:
-        query = build_query_vectors(tokens, model)
-        cand_pairs = df.select(*CTX_KEY, "res_id").distinct()
-        ctx = context_scores(query, cand_pairs, model)
-        nil_doc = nil_context_scores(query)
-        df = (
-            df.join(ctx, [*CTX_KEY, "res_id"], "left")
-            .join(nil_doc, CTX_KEY, "left")
-            .withColumn("p_c_given_e", F.col("p_c"))
-            .withColumn(
-                "nil_context_score",
-                F.coalesce(F.col("nil_context_score"), F.lit(0.0)),
-            )
-            .drop("p_c")
-        )
+        df = context_scores(
+            build_query_vectors(tokens, model), df, model
+        ).withColumnRenamed("p_c", "p_c_given_e")
         nil_s_df = nil_spot_scores(
             spot_cands.select(*SPOT_KEY, "token_stems").distinct(), model
         )
@@ -244,15 +244,14 @@ def best_k(scored: DataFrame, k: int = 20) -> DataFrame:
         & ~F.isnan(F.col("score"))
         & (F.col("score") > F.col("nil_score"))
     )
-    w = Window.partitionBy(*SPOT_KEY).orderBy(F.desc("score"), F.asc("res_id"))
+    wp = Window.partitionBy(*SPOT_KEY)
+    w = wp.orderBy(F.desc("score"), F.asc("res_id"))
     kept = kept.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
-    wp = Window.partitionBy(*SPOT_KEY)
-    w_ord = Window.partitionBy(*SPOT_KEY).orderBy(F.desc("score"), F.asc("res_id"))
     # percentage of second rank: exp(next - this); unset (-1.0) for the last
     kept = kept.withColumn(
         "percentage_second_rank",
-        F.coalesce(F.exp(F.lead("score").over(w_ord) - F.col("score")), F.lit(-1.0)),
+        F.coalesce(F.exp(F.lead("score").over(w) - F.col("score")), F.lit(-1.0)),
     )
 
     # softmax over kept candidates ∪ NIL (log-sum-exp via window max)

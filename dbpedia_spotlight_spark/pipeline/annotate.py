@@ -6,8 +6,9 @@ Reference lifecycle (SURVEY.md §3.1, rest/.../SpotlightInterface.java:124-172):
 Spark DAG:
     documents --mapInPandas--> spots          (broadcast dictionary, no shuffle)
     documents --mapInPandas--> tokens         (no shuffle)
-    spots ⋈ surface_forms ⋈ candidates        (broadcast + two-stage skew join)
-    ⋈ context_counts ⋈ query vectors -> agg   (shuffle on res_id / context)
+    spots ⟕ sf ⟕ normalized sf ⋈ candidates   (broadcast + two-stage skew join)
+    pairs ⋈ context_counts ⋈ query -> Σδ      (shuffle on res_id / context)
+    candidate rows ⟕ Σδ ⟕ NIL ⟕ res totals    (one left-join chain -> p_c)
     window rank / softmax                     (shuffle on spot key)
 
 The filter step is operators/filters.apply_default_filter_chain, composed

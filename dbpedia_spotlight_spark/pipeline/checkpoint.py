@@ -53,13 +53,10 @@ class Manifest:
 
     def append(self, record: dict) -> None:
         os.makedirs(self.path, exist_ok=True)
-        tmp = self.file + ".tmp"
         with open(self.file, "a") as f:
             f.write(json.dumps(record) + "\n")
             f.flush()
             os.fsync(f.fileno())
-        if os.path.exists(tmp):
-            os.remove(tmp)
 
 
 def bucket_of(doc_id_col, num_buckets: int):
@@ -101,6 +98,9 @@ def run_checkpointed(
     """Run `pipeline_fn(documents_subset) -> DataFrame` bucket-wave by
     bucket-wave, writing `<out>/data/bucket=<k>/` plus manifest lineage.
 
+    Each result row goes to bucket_of(doc_id); a foreign doc_id hashing
+    outside the wave lands in the wave's pseudo-bucket -(min(wave)+1).
+
     fail_after_waves: test hook — raise after N waves to simulate a kill.
     Returns run metrics {waves_run, buckets_done, rows_written, resumed_from}.
     """
@@ -119,12 +119,11 @@ def run_checkpointed(
         if fail_after_waves is not None and wi >= fail_after_waves:
             raise RuntimeError(f"simulated kill after {wi} waves")
         t0 = time.time()
-        # Result rows whose doc_id is absent from the input land in a
-        # per-wave pseudo-bucket -(min(wave)+1) rather than a shared -1:
-        # that keeps them attributable (and countable) per wave, and makes
-        # crash cleanup a plain partition-directory delete. The key is
-        # derived from the wave's bucket ids, so a resumed (re-run) wave
-        # maps to the same pseudo-bucket.
+        # A per-wave pseudo-bucket rather than a shared -1 keeps foreign
+        # rows attributable (and countable) per wave, and makes crash
+        # cleanup a plain partition-directory delete. The key is derived
+        # from the wave's bucket ids, so a resumed (re-run) wave maps to
+        # the same pseudo-bucket.
         pseudo = -(min(wave) + 1)
         data_path = os.path.join(output_path, "data")
         # Crash recovery: a kill between the parquet append and the manifest
@@ -140,11 +139,10 @@ def run_checkpointed(
                 shutil.rmtree(d)
         subset = docs_b.filter(F.col("_bucket").isin(wave))
         result = pipeline_fn(subset.drop("_bucket"))
-        out = result.join(
-            docs_b.select("doc_id", "_bucket").distinct(), "doc_id", "left"
-        ).withColumn(
-            "bucket", F.coalesce(F.col("_bucket"), F.lit(pseudo))
-        ).drop("_bucket")
+        b = bucket_of(F.col("doc_id"), num_buckets)
+        out = result.withColumn(
+            "bucket", F.when(b.isin(wave), b).otherwise(F.lit(pseudo))
+        )
         (
             out.repartition("bucket")
             .write.mode("append")

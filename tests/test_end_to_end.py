@@ -13,7 +13,7 @@ from dbpedia_spotlight_spark.operators.filters import (
     type_filter,
 )
 from dbpedia_spotlight_spark.pipeline.annotate import annotate, verify_span_invariant
-from dbpedia_spotlight_spark.pipeline.checkpoint import run_checkpointed
+from dbpedia_spotlight_spark.pipeline.checkpoint import bucket_of, run_checkpointed
 from dbpedia_spotlight_spark.pipeline.evaluate import (
     linking_metrics,
     spotter_metrics,
@@ -102,6 +102,30 @@ def test_checkpoint_resume(world, tmp_path):
     assert got.select(key).exceptAll(direct.select(key)).isEmpty()
 
 
+def test_checkpoint_buckets_follow_doc_id(spark, tmp_path):
+    """Each row is written to bucket_of(doc_id); a doc_id the pipeline
+    emits outside the wave it runs lands in that wave's pseudo-bucket."""
+    docs = spark.createDataFrame([(f"d{i}",) for i in range(40)], "doc_id string")
+    ids = spark.createDataFrame([(f"x{i}",) for i in range(40)], "doc_id string")
+    foreign = (
+        ids.filter(bucket_of(F.col("doc_id"), 4) == 3).orderBy("doc_id").first()[0]
+    )
+    out = str(tmp_path / "ckpt")
+
+    def fn(subset):
+        return subset.unionByName(spark.createDataFrame([(foreign,)], "doc_id string"))
+
+    run_checkpointed(docs, fn, out, num_buckets=4, wave_size=2)
+    got = spark.read.parquet(out + "/data")
+    mine = got.filter(F.col("doc_id") != foreign)
+    assert mine.count() == 40
+    assert mine.filter(F.col("bucket") != bucket_of(F.col("doc_id"), 4)).isEmpty()
+    # waves [0, 1] and [2, 3]: outside the first wave, inside the second
+    assert sorted(
+        r["bucket"] for r in got.filter(F.col("doc_id") == foreign).collect()
+    ) == [-1, 3]
+
+
 def test_context_windowed_annotate(world):
     """D2: windowed scoring stays accurate (fixtures include a >250-token
     doc; per-window vectors must not break the P/R gate)."""
@@ -160,6 +184,22 @@ def test_filters_and_triples_read_annotations_once(world):
     ann_scans = _final_plan_nodes(ann)["MapInPandas"]
     assert ann_scans > 0
     assert _final_plan_nodes(triples)["MapInPandas"] == ann_scans
+
+
+# Exchange nodes in the executed plan of default annotate(world) (final
+# and initial plan, counted as _final_plan_nodes does): 57 while context
+# scores were joined back onto the candidate rows as a pair table and
+# surface forms resolved as a union of hits and misses; 37 with one left-join
+# chain per candidate row and a one-pass resolve.
+ANNOTATE_MAX_EXCHANGES = 37
+
+
+def test_annotate_plan_scores_rows_in_one_join_chain(world):
+    df = annotate(world.documents, world.model)
+    df.collect()
+    nodes = _final_plan_nodes(df)
+    assert nodes["Union"] == 0
+    assert 0 < nodes["Exchange"] <= ANNOTATE_MAX_EXCHANGES
 
 
 def test_annotate_plan_reuses_spot_exchange(world):

@@ -12,6 +12,7 @@ from dbpedia_spotlight_spark.operators.disambiguate import (
     context_scores,
     context_window,
     nil_context_scores,
+    score_candidates,
 )
 from dbpedia_spotlight_spark.operators.tokenizer import flat_to_interleaved, tokenize_documents
 
@@ -99,6 +100,62 @@ def test_context_scores_match_hand_math(spark, model):
     assert nil_got == pytest.approx(nil(), rel=1e-9)
     for uri in ["Apple_Inc", "Apple", "Paris"]:
         assert got[res[uri]] == pytest.approx(score(res[uri]), rel=1e-9), uri
+
+
+def _score_rows(spark, model, text, width, cands):
+    """score_candidates over hand-made candidate rows of doc d1, given as
+    (offset, window_id, res_id), against the tokens of `text` in windows
+    of `width` tokens -> {(offset, res_id): row}."""
+    docs = flat_to_interleaved(spark.createDataFrame([("d1", text)], "doc_id string, text string"))
+    tokens = tokenize_documents(docs).withColumn("window_id", context_window(width))
+    rows = spark.createDataFrame(
+        [("d1", 0, off, w, [], 1000, 1600, res_id, 1) for off, w, res_id in cands],
+        "doc_id string, span_pos int, offset int, window_id int, "
+        "token_stems array<string>, annotated_count int, total_count int, "
+        "res_id int, pair_count int",
+    )
+    return {
+        (r["offset"], r["res_id"]): r
+        for r in score_candidates(rows, tokens, model).collect()
+    }
+
+
+def test_context_scores_edge_cases(spark, model):
+    """Two rows sharing one (context, resource) get the same p_c; a
+    resource without a context vector gets a null p_c; a context with no
+    vocabulary token gets nil_context_score 0; two windows of one
+    document score apart."""
+    from dbpedia_spotlight_spark.operators.tokenizer import stem
+
+    res = {r["uri"]: r["res_id"] for r in model.resources.collect()}
+    inc, fruit, item = res["Apple_Inc"], res["Apple"], res["Apple_Item_00"]
+    rows = _model_rows(model)
+
+    text = "iphone mac company"
+    got = _score_rows(spark, model, text, 250, [(0, 0, inc), (7, 0, inc), (0, 0, item)])
+    score, nil = _hand_scores(rows, [stem(t) for t in text.split()])
+    assert got[(0, inc)]["p_c_given_e"] == got[(7, inc)]["p_c_given_e"]
+    assert got[(0, inc)]["p_c_given_e"] == pytest.approx(score(inc), rel=1e-9)
+    assert got[(0, inc)]["nil_context_score"] == pytest.approx(nil(), rel=1e-9)
+    assert got[(0, item)]["p_c_given_e"] is None
+    assert got[(0, item)]["score"] is None
+
+    got = _score_rows(spark, model, "the of and zzqxv", 250, [(0, 0, inc)])
+    assert got[(0, inc)]["nil_context_score"] == 0.0
+    assert got[(0, inc)]["p_c_given_e"] == 0.0
+
+    words = "iphone mac company fruit tree orchard".split()
+    got = _score_rows(spark, model, " ".join(words), 3, [
+        (0, 0, inc), (0, 0, fruit), (24, 1, inc), (24, 1, fruit),
+    ])
+    for off, window in ((0, words[:3]), (24, words[3:])):
+        score, nil = _hand_scores(rows, [stem(t) for t in window])
+        for res_id in (inc, fruit):
+            r = got[(off, res_id)]
+            assert r["p_c_given_e"] == pytest.approx(score(res_id), rel=1e-9)
+            assert r["nil_context_score"] == pytest.approx(nil(), rel=1e-9)
+    assert got[(0, inc)]["p_c_given_e"] > got[(24, inc)]["p_c_given_e"]
+    assert got[(0, fruit)]["p_c_given_e"] < got[(24, fruit)]["p_c_given_e"]
 
 
 def test_query_vector_counts(spark, model):
